@@ -101,7 +101,11 @@ def merge_fact_shipments(target: DataFrame | None, src: DataFrame) -> DataFrame:
     dags/2_logistics-shipment-dag.py:149-205): keep the latest row per
     (order_id, carrier_id, seller_id) by created_at desc (shipment_id as
     deterministic tiebreaker — the reference leaves ties arbitrary), then
-    upsert. ``target=None`` bootstraps the fact table."""
+    upsert. ``target=None`` bootstraps the fact table.
+
+    The merge is not ``strict``: ``dedup_latest`` already leaves one row
+    per key, so the duplicate-source check would only recompute the
+    source for nothing (the runner's own rule, ``strict=not dedup_order``)."""
     deduped = dedup_latest(
         src, list(MERGE_KEYS), [F.desc("created_at"), F.desc("shipment_id")]
     )
@@ -111,7 +115,7 @@ def merge_fact_shipments(target: DataFrame | None, src: DataFrame) -> DataFrame:
         c: F.col(f"s.{c}") for c in deduped.columns if c not in MERGE_KEYS
     }
     return merge_upsert(
-        target, deduped, keys=list(MERGE_KEYS), update_set=update_set, strict=True
+        target, deduped, keys=list(MERGE_KEYS), update_set=update_set
     )
 
 

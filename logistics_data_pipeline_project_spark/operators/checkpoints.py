@@ -153,16 +153,17 @@ class released_checkpoints:
         return False
 
 
-def checkpointed_write(df: DataFrame, write_fn) -> None:
+def checkpointed_write(df: DataFrame, write_fn):
     """Checkpoint ``df`` eagerly, hand the checkpointed frame to
     ``write_fn`` (typically a TableStore overwrite — the checkpoint cuts
     lineage to the snapshot files the write is about to unlink), then
-    free the blocks: after the data is durably written the checkpoint is
-    dead weight. This is the write-scoped discipline for the store and
-    streaming foreachBatch paths, where the 30-min default cleaner
-    interval would otherwise leak one checkpoint PER BATCH."""
+    free the blocks and return ``write_fn``'s result: after the data is
+    durably written the checkpoint is dead weight. This is the
+    write-scoped discipline for the store, runner and foreachBatch write
+    paths, where the 30-min default cleaner interval would otherwise leak
+    one checkpoint PER WRITE."""
     ck, ids = tracked_local_checkpoint(df)
     try:
-        write_fn(ck)
+        return write_fn(ck)
     finally:
         free_checkpoints(df.sparkSession, ids)

@@ -35,6 +35,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.checkpoints import checkpointed_write
 
@@ -53,6 +54,8 @@ class TableStore:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.retain_versions = max(1, retain_versions)
+        #: data dir → (its st_mtime_ns, the schema Spark inferred there)
+        self._schemas: dict[str, tuple[int, StructType]] = {}
         os.makedirs(warehouse_dir, exist_ok=True)
 
     # -- layout ---------------------------------------------------------
@@ -131,7 +134,9 @@ class TableStore:
             keep.add(cur)
         for v in self.versions(name):
             if v not in keep:
-                shutil.rmtree(self._vdir(name, v), ignore_errors=True)
+                vdir = self._vdir(name, v)
+                shutil.rmtree(vdir, ignore_errors=True)
+                self._schemas.pop(vdir, None)
 
     # -- public API -----------------------------------------------------
 
@@ -145,8 +150,25 @@ class TableStore:
         return self.current_version(name) is not None
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
-        """Read the current snapshot, or time-travel to ``version``."""
-        return self.spark.read.parquet(self._resolve(name, version))
+        """Read the current snapshot, or time-travel to ``version``.
+
+        A committed version directory never changes, so the schema Spark
+        infers from its footers is inferred once: later reads of the same
+        directory pass it to ``spark.read.schema`` and skip the footer-read
+        job that inference launches. The cache keys on the directory and
+        its ``st_mtime_ns``, so a table deleted and rewritten at the same
+        path is inferred again."""
+        path = self._resolve(name, version)
+        try:
+            mtime = os.stat(path).st_mtime_ns
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)  # let Spark raise
+        cached = self._schemas.get(path)
+        if cached is not None and cached[0] == mtime:
+            return self.spark.read.schema(cached[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = (mtime, df.schema)
+        return df
 
     def overwrite(
         self, name: str, df: DataFrame, meta: dict | None = None
@@ -158,11 +180,12 @@ class TableStore:
         swap, so it commits atomically with the data — readers can never
         see a snapshot without its metadata or vice versa. Spark ignores
         ``_``-prefixed files, so the parquet scan is unaffected."""
-        if self._has_legacy_files(name):
-            self._migrate_legacy(name)
+        legacy = self._has_legacy_files(name)
         os.makedirs(self._table_dir(name), exist_ok=True)
         vs = self.versions(name)
-        nxt = (vs[-1] + 1) if vs else 1
+        # a flat pre-versioning layout becomes v_000001 only AFTER the new
+        # version is written: ``df`` may be a pending read of those files
+        nxt = (vs[-1] + 1) if vs else (2 if legacy else 1)
         # the version dir is invisible to readers until the pointer swap,
         # so Spark can write it in place; a crash leaves an uncommitted
         # orphan dir that the next write's numbering skips and GC removes
@@ -170,6 +193,8 @@ class TableStore:
         if meta is not None:
             with open(os.path.join(self._vdir(name, nxt), _META), "w") as f:
                 json.dump(meta, f)
+        if legacy:
+            self._migrate_legacy(name)
         self._commit_pointer(name, nxt)
         self._gc(name)
 

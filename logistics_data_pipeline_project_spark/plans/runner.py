@@ -10,9 +10,16 @@ dags/snowflake-EDW-ETL-dag.py:549-561), each materialized per its config:
                      unique_key (dbt incremental_strategy='merge', §M5)
 - ``snapshot``     → SCD2 history via operators.merge.scd2_apply (§M6)
 
-Every run appends a row to the ETL_AUDIT_LOG table (§M7,
+Every model run records a row for the ETL_AUDIT_LOG table (§M7,
 dbt/.../macros/log_audit_event.sql:1-21): model, run id, status, started/
-finished timestamps, rows processed.
+finished timestamps, rows processed. The rows of one ``run()`` are
+committed together, as ONE append when the run ends; a FAILED row is
+committed at once (with the rows buffered before it) so the
+``on_failure`` hook always finds it in the log.
+
+A model with ``checks`` (other than a view) is computed once: its output
+is checkpointed, and both the checks and the write read the checkpoint,
+so the rows committed are exactly the rows the checks passed.
 
 Threading note: Spark sessions are thread-safe for job submission; running
 independent models concurrently lets the scheduler interleave their stages
@@ -30,6 +37,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession, functions as F
 
+from ..operators.checkpoints import checkpointed_write
 from ..operators.merge import dedup_latest, merge_upsert, scd2_apply
 from .materialize import TableStore
 
@@ -123,7 +131,17 @@ class ModelRunner:
                 ds.difference_update(ready)
         return levels
 
-    def _audit(self, model: str, run_id: str, status: str, started: dt.datetime, rows: int) -> None:
+    def _audit(
+        self,
+        buffer: list[Row],
+        model: str,
+        run_id: str,
+        status: str,
+        started: dt.datetime,
+        rows: int,
+    ) -> None:
+        """Buffer the model's audit row for the run's one commit; a FAILED
+        row is committed at once."""
         row = Row(
             job_name=model,
             run_id=run_id,
@@ -133,7 +151,16 @@ class ModelRunner:
             rows_processed=rows,
         )
         with self._lock:
-            self.store.append(AUDIT_TABLE, self.spark.createDataFrame([row]))
+            buffer.append(row)
+        if status == "FAILED":
+            self._flush_audit(buffer)
+
+    def _flush_audit(self, buffer: list[Row]) -> None:
+        with self._lock:
+            rows = buffer[:]
+            buffer.clear()
+            if rows:
+                self.store.append(AUDIT_TABLE, self.spark.createDataFrame(rows))
 
     def _write_counted(self, name: str, df: DataFrame) -> int:
         """Atomic overwrite + audit row count in ONE job: an Observation
@@ -193,21 +220,31 @@ class ModelRunner:
             .withColumn("is_current", F.lit(True))
         )
 
-    def _run_one(self, name: str, run_id: str) -> None:
+    def _check_and_materialize(self, m: Model, df: DataFrame) -> int:
+        if m.checks is not None:
+            failed = [r for r in m.checks(df) if not r.passed]
+            if failed:
+                raise DataQualityError(m.name, failed)
+        if m.materialization == "snapshot" and not self.store.exists(m.name):
+            df = self._snapshot_bootstrap(m, df)
+        return self._materialize(m, df)
+
+    def _run_one(self, name: str, run_id: str, audit: list[Row]) -> None:
         m = self.models[name]
         started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         try:
             df = m.fn(self.spark, self.ref)
-            if m.checks is not None:
-                failed = [r for r in m.checks(df) if not r.passed]
-                if failed:
-                    raise DataQualityError(name, failed)
-            if m.materialization == "snapshot" and not self.store.exists(m.name):
-                df = self._snapshot_bootstrap(m, df)
-            rows = self._materialize(m, df)
-            self._audit(name, run_id, "SUCCESS", started, rows)
+            if m.checks is None or m.materialization == "view":
+                # a view must keep its lineage: freeing a checkpoint under
+                # it would break every later read of the view
+                rows = self._check_and_materialize(m, df)
+            else:
+                rows = checkpointed_write(
+                    df, lambda ck: self._check_and_materialize(m, ck)
+                )
+            self._audit(audit, name, run_id, "SUCCESS", started, rows)
         except Exception as exc:
-            self._audit(name, run_id, "FAILED", started, -1)
+            self._audit(audit, name, run_id, "FAILED", started, -1)
             if self.on_failure is not None:
                 try:
                     self.on_failure(name, run_id, exc)
@@ -223,14 +260,21 @@ class ModelRunner:
             if n not in self.models:
                 raise KeyError(f"unknown model {n!r}")
         run_id = uuid.uuid4().hex[:12]
-        for level in self._toposort(selected):
-            if len(level) == 1:
-                self._run_one(level[0], run_id)
-            else:
-                with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                    futures = [pool.submit(self._run_one, n, run_id) for n in level]
-                    for f in futures:
-                        f.result()
+        audit: list[Row] = []
+        try:
+            for level in self._toposort(selected):
+                if len(level) == 1:
+                    self._run_one(level[0], run_id, audit)
+                else:
+                    with ThreadPoolExecutor(max_workers=self.threads) as pool:
+                        futures = [
+                            pool.submit(self._run_one, n, run_id, audit)
+                            for n in level
+                        ]
+                        for f in futures:
+                            f.result()
+        finally:
+            self._flush_audit(audit)
         return run_id
 
     def audit_log(self) -> DataFrame:

@@ -21,9 +21,12 @@ Scale design notes (the settings that matter at 100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Defaults applied to every session this engine creates.
 ENGINE_CONF: dict[str, str] = {
@@ -133,11 +136,13 @@ def get_spark(
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable conf to an externally-created
-    session (the driver hands us one in ``__spark_entry__.entry``)."""
+    session (the driver hands us one in ``__spark_entry__.entry``). A conf
+    the running session refuses is logged as a warning and skipped."""
     for k, v in ENGINE_CONF.items():
         if not k.startswith(("spark.ui",)):
             try:
                 spark.conf.set(k, v)
-            except Exception:
-                pass  # static conf on a running session — keep going
+            except Exception as exc:
+                # a static conf on a running session: keep going, but say so
+                _log.warning("tune_session: could not set %s=%s: %s", k, v, exc)
     return spark
